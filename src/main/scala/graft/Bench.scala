@@ -67,11 +67,11 @@ import graft.core.Tables
   *    it is self-load-dominated (see the inline note).
   *
   * Evidence-vs-engine split (round-6 verdict fix #2): queries in
-  * `EvidenceQueries` exist to keep A/B evidence honest (they pin
-  * deliberately pessimized code paths, e.g. the pure-distributed CC
-  * twins with `driverFinishEdges=0`) and are DESIGNED to lose to the
-  * shipped defaults. They still run and stay in CORRECTNESS, but they
-  * are priced separately: the headline `value` is the ENGINE total and
+  * `EvidenceQueries` pin deliberately pessimized code paths (the
+  * pure-distributed CC twin `dedup_groups_star`, run with
+  * `driverFinishEdges=0`) and are DESIGNED to lose to the shipped
+  * defaults. They still run and stay in CORRECTNESS, but they are
+  * priced separately: the headline `value` is the ENGINE total and
   * `evidence_sec` carries their sum, grouped under an "evidence" family.
   *
   * SPARK_GRAFT_QUERIES=a,b,c restricts the set (local iteration only;
@@ -95,7 +95,7 @@ import graft.core.Tables
   */
 object Bench {
 
-  /** Deliberately pessimized A/B pin twins — correctness evidence, not
+  /** Deliberately pessimized pin twins — correctness evidence, not
     * engine pricing. The set is owned by DedupQueries, beside the pin
     * definitions, so a rename there cannot desync this split. */
   val EvidenceQueries: Set[String] = graft.queries.DedupQueries.EvidencePins

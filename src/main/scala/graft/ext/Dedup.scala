@@ -167,28 +167,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
-  /** Algorithm choice for [[connectedComponents]]. */
-  sealed abstract class CcAlgo
-  object CcAlgo {
-    /** Min-label propagation: O(component-diameter) rounds, one
-      * equi-join + partial agg per round. Right when dup clusters are
-      * dense (LSH links most members directly, diameters stay small). */
-    case object MinLabel extends CcAlgo
-    /** Alternating large-star/small-star contraction (Kiveris et al.,
-      * "Connected Components in MapReduce and Beyond"): O(log n) rounds
-      * on ANY topology, two equi-joins + a set-equality check per round.
-      * The DEFAULT for the distributed regime: its round bound does not
-      * depend on component diameter. Isolated A/B (fresh JVM per
-      * algorithm, pairs pre-materialized — `graft.CcBench`, numbers in
-      * PERF_NOTES.md) shows star ≈ min-label at test scale (0.98 s vs
-      * 1.09 s warm median on the `dedup_groups` pairs at sf0.1; the
-      * earlier "star ~3× faster" reading was run-order contamination in
-      * the shared-JVM bench, withdrawn in round 6). The tie-break is the
-      * worst-case bound: min-label is O(diameter) rounds, star is
-      * O(log n) on the same per-round shuffle budget. */
-    case object StarContraction extends CcAlgo
-  }
-
   /** Default edge-count bound below which [[connectedComponents]] skips
     * the distributed rounds and finishes with a driver-side union-find:
     * 500k oriented distinct edges ≈ 8 MB collected, label map ≤ 1M
@@ -211,31 +189,33 @@ object Dedup {
     *    Contraction endgames and test-scale graphs both land here; the
     *    bound is explicit and the collect is provably ≤ 16·bound bytes
     *    (the gate counts exactly the rows collected).
-    *  - otherwise the distributed `algo` runs (star contraction default).
+    *  - otherwise alternating large-star/small-star contraction runs
+    *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    *    SoCC 2014): O(log n) rounds on ANY topology, so the round bound
+    *    does not depend on component diameter.
     *
     * The driver finish holds ids as longs, so it (and the star endgame
     * cutover) engages only when BOTH id columns are integral; any other
     * orderable id type (e.g. string fingerprints) runs the distributed
     * path end-to-end, which never narrows the type.
     *
-    * Scale notes (shared by both distributed algorithms):
-    *  - per-round cost is equi-join + partial aggregate — never all-pairs;
-    *  - every round's labels are marked for a LAZY `localCheckpoint` whose
-    *    materializing action is the convergence count, so a round is ONE
+    * Scale notes (distributed path):
+    *  - per-round cost is equi-joins + partial aggregates — never all-pairs;
+    *  - every round's edge set is marked for a LAZY `localCheckpoint` whose
+    *    materializing action is the convergence probe, so a round is ONE
     *    Spark job and the plan stays constant-size (lineage truncation
     *    beats the classic iterative-Spark plan blowup);
-    *  - convergence is checked every `checkEvery` rounds (min-label): at
-    *    small data sizes wall time is probes × job round-trip latency, so
-    *    batching rounds cuts latency; the label sum decreases
-    *    monotonically, so "the batch composite changed nothing" remains a
-    *    sound fixpoint test;
-    *  - each round UNPERSISTS the previous round's checkpointed labels
+    *  - convergence is probed EVERY round, measured in both regimes (see
+    *    PERF_NOTES.md): dup topologies converge in ~2 rounds, so rounds
+    *    batched past the fixpoint (6 shuffle stages each) cost more than
+    *    the probes they skip;
+    *  - each round UNPERSISTS the previous round's checkpointed edges
     *    once the new ones are materialized (via the RDD-level handle —
     *    `Dataset.unpersist` cannot reach a checkpoint's cache). Without
-    *    this every intermediate (id, component) RDD stays cached for the
-    *    JVM's lifetime (the round-4 storage-memory leak). Only the FINAL
-    *    labels stay cached — they back the returned frame.
-    *  - `maxIters` counts propagation rounds; IllegalStateException on
+    *    this every intermediate edge RDD stays cached for the JVM's
+    *    lifetime (the round-4 storage-memory leak). Only the FINAL edges
+    *    stay cached — they back the returned frame.
+    *  - `maxIters` counts contraction rounds; IllegalStateException on
     *    non-convergence beats silently wrong groups.
     *
     * Returns (id, component) for every endpoint appearing in `pairs`;
@@ -243,10 +223,8 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
                           bCol: String = "b_id", maxIters: Int = 25,
-                          checkEvery: Int = 3,
-                          algo: CcAlgo = CcAlgo.StarContraction,
                           driverFinishEdges: Long = DriverFinishEdges): DataFrame = {
-    // orient + dedup ONCE, shared by every path; the checkpoint truncates
+    // orient + dedup ONCE, shared by both paths; the checkpoint truncates
     // the (potentially huge) pair-pipeline lineage so the edge-count
     // probe and the rounds both read the materialized edge set. Keeps
     // self-pairs so isolated endpoints still get a label.
@@ -256,7 +234,7 @@ object Dedup {
       .localCheckpoint(false)
     // driver finish requires integral ids (collected as longs); anything
     // else — string fingerprints, decimals — stays distributed, where the
-    // algorithms only compare and min-reduce.
+    // contraction only compares and min-reduces.
     val integralIds = {
       import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
       Seq(aCol, bCol).forall { c =>
@@ -272,24 +250,12 @@ object Dedup {
     // many isolated (self-paired) endpoints.
     val small = integralIds && driverFinishEdges > 0 &&
       base.count() <= driverFinishEdges
+    // the bound also rides along as the mid-loop endgame cutover: once
+    // contraction shrinks the edge set under it, the remaining rounds
+    // collapse into the driver union-find
     if (small) ccDriverFinish(base)
-    else algo match {
-      case CcAlgo.MinLabel => ccMinLabelFrom(base, maxIters, checkEvery)
-      // star gets per-round probes regardless of checkEvery, measured in
-      // BOTH regimes: at tiny edge counts batching 2-3 ADDED ~1 s/query
-      // (sf0.1, round 5), and at 2.2M edges CcBench measured 8.1 s
-      // (per-round) vs 10.8 s (batch 2) vs 18.4 s (batch 3) — dup
-      // topologies converge in ~2 composite rounds, so a batch's wasted
-      // post-fixpoint rounds (6 shuffle stages each) always cost more
-      // than the probe they skip. ccStar keeps the batching knob for
-      // deployments where driver→cluster job latency dominates stages.
-      // The bound also rides along as the mid-loop endgame cutover: once
-      // contraction shrinks the edge set under it, the remaining rounds
-      // collapse into the driver union-find.
-      case CcAlgo.StarContraction =>
-        ccStarFrom(base, maxIters, checkEvery = 1,
-          cutoverEdges = if (integralIds) driverFinishEdges else 0L)._1
-    }
+    else ccStarFrom(base, maxIters,
+      cutoverEdges = if (integralIds) driverFinishEdges else 0L)
   }
 
   private def unpersistCkpt(df: DataFrame): Unit =
@@ -363,70 +329,6 @@ object Dedup {
     labels
   }
 
-  private def ccMinLabelFrom(base: DataFrame, maxIters: Int, checkEvery: Int): DataFrame = {
-    // localCheckpoint, NOT persist (done once in connectedComponents): a
-    // persisted frame keeps the full upstream plan (here: the whole LSH
-    // pair pipeline) in its analyzed tree, and every per-round Dataset op
-    // re-ANALYZES a tree embedding several copies of it — at sf0.1 that
-    // driver-side Catalyst time was ~10 s while the actual jobs took
-    // ~0.7 s. The checkpoint truncates the lineage to a LogicalRDD leaf,
-    // so round plans stay constant-size and analysis is O(round body).
-    // explode, not union-of-two-projections: a union would read the edge
-    // checkpoint twice per round. Self-pairs propagate their own label —
-    // harmless, and they keep isolated endpoints labelled.
-    val edges = base
-      .select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst")),
-        struct(col("v").as("src"), col("u").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    var ckpt = edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(false) // lazy: the first batch's aggregate materializes it
-    var labels = ckpt
-    // Convergence probe: labels are monotonically non-increasing, so
-    // Σ(component) is strictly decreasing until the fixpoint — one scalar
-    // aggregate per BATCH replaces the per-round changed-row count (and
-    // the second join the old __chg column forced into every round).
-    // DECIMAL(38,0): exact at any id magnitude, no Long overflow at 100 TB.
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val rounds = math.min(checkEvery, maxIters - iter)
-      var cur = labels
-      for (_ <- 0 until rounds) {
-        // new label = min(own, labels of in-neighbours): one equi-join,
-        // then a single min-aggregate over (propagated ∪ current)
-        cur = edges
-          .join(cur.select(col("id").as("src"), col("component").as("nl")), "src")
-          .select(col("dst").as("id"), col("nl").as("component"))
-          .union(cur)
-          .groupBy("id")
-          .agg(min(col("component")).as("component"))
-      }
-      val next = cur.localCheckpoint(false) // lazy: the aggregate materializes it
-      val row = next.agg(
-        count(lit(1)),
-        sum(col("component").cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
-      val curSum = row.getDecimal(1)
-      converged = row.getLong(0) == 0L ||
-        (prevSum != null && prevSum.compareTo(curSum) == 0)
-      prevSum = curSum
-      unpersistCkpt(ckpt) // previous batch's labels: materialized, now dead
-      ckpt = next
-      labels = next
-      iter += rounds
-    }
-    // the final labels are a self-contained LogicalRDD; the shared edge
-    // base no longer backs anything this function returns
-    unpersistCkpt(base)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations")
-    labels
-  }
-
   /** One large-star round: every node attaches its strictly-LARGER
     * neighbours to the minimum of its closed neighbourhood. Edges stay
     * oriented (larger endpoint first). */
@@ -453,68 +355,35 @@ object Dedup {
     relinked.union(mins.select(col("u"), col("m").as("v"))).distinct()
   }
 
-  /** Connected components via alternating large-star/small-star
-    * contraction. Returns (labels, roundsUsed) — the round count is
-    * asserted O(log n) on a planted chain in DedupSpec. At the fixpoint
-    * the edge set is a union of stars centred on component minima, so
-    * labels fall out of a single group-by. Convergence = the (distinct,
-    * oriented) edge set is unchanged by a full round, checked with two
-    * anti-join probes. */
-  private[ext] def ccStar(pairs: DataFrame, aCol: String = "a_id",
-                          bCol: String = "b_id",
-                          maxIters: Int = 20,
-                          checkEvery: Int = 2): (DataFrame, Int) =
-    ccStarFrom(pairs
-      .select(greatest(col(aCol), col(bCol)).as("u"), least(col(aCol), col(bCol)).as("v"))
-      .distinct()
-      .localCheckpoint(false), maxIters, checkEvery)
-
   /** The contraction loop over a pre-oriented, deduplicated, checkpointed
     * edge base (self-pairs included — they keep isolated endpoints
-    * labelled). `base` stays cached: it backs the returned plan (see
-    * class doc on the one-frame-per-call residue).
+    * labelled). `base` stays cached: it backs the returned plan. At the
+    * fixpoint the edge set is a union of stars centred on component
+    * minima, so labels fall out of a single group-by. Convergence = the
+    * (distinct, oriented) edge set is unchanged by a full round.
     *
-    * `cutoverEdges` > 0 enables the mid-loop ENDGAME: the convergence
-    * probe also counts the contracted edge set (same job — the probe is
-    * a full-outer join of next vs prev, so |next| is one more aggregate
-    * over it), and once it shrinks under the bound the remaining rounds
-    * are replaced by the driver union-find. Sound because neither star
-    * round ever drops a node from the edge set (a node's smaller
-    * neighbours re-emit it from largeStar, its own min-row keeps it in
-    * smallStar), so components over any intermediate edge set equal
-    * components over the original restricted to non-isolated nodes —
-    * the same invariant the fixpoint label extraction relies on. */
+    * `cutoverEdges` > 0 enables the mid-loop ENDGAME: once the contracted
+    * edge set shrinks under the bound the remaining rounds are replaced
+    * by the driver union-find. Sound because neither star round ever
+    * drops a node from the edge set (a node's smaller neighbours re-emit
+    * it from largeStar, its own min-row keeps it in smallStar), so
+    * components over any intermediate edge set equal components over the
+    * original restricted to non-isolated nodes — the same invariant the
+    * fixpoint label extraction relies on. */
   private def ccStarFrom(base: DataFrame, maxIters: Int,
-                         checkEvery: Int,
-                         cutoverEdges: Long = 0L): (DataFrame, Int) = {
+                         cutoverEdges: Long): DataFrame = {
     var edges = base.filter(col("u") =!= col("v"))
     var prevCkpt: DataFrame = null
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      // batch `checkEvery` contraction rounds per convergence probe: the
-      // star potential (Σ edge endpoints) decreases monotonically, so an
-      // edge set unchanged by the ROUND COMPOSITE is a fixpoint — same
-      // soundness argument as min-label's batched Σ-probe. Each probe is
-      // one driver job, and at test scale wall time is probes × job
-      // round-trip; the post-fixpoint rounds a batch wastes are two
-      // equi-joins over an already-contracted (small) edge set.
-      // EVERY round still gets its own lazy localCheckpoint: a star round
-      // references its input FOUR times (largeStar's union-of-directions
-      // twice, smallStar's join-with-mins twice), so composing rounds
-      // without truncation re-executes the previous round's shuffles
-      // ~4× per level (measured 15-41 s/query). The lazy checkpoint
-      // truncates the logical plan immediately while deferring execution,
-      // so the whole batch still materializes inside the single probe
-      // job; intermediates are freed right after that job.
-      val rounds = math.min(checkEvery, maxIters - iter)
-      var cur = edges
-      val intermediates = scala.collection.mutable.Buffer.empty[DataFrame]
-      for (i <- 0 until rounds) {
-        cur = smallStar(largeStar(cur)).localCheckpoint(false)
-        if (i < rounds - 1) intermediates += cur
-      }
-      val next = cur
+      // a star round references its input FOUR times (largeStar's
+      // union-of-directions twice, smallStar's join-with-mins twice), so
+      // composing rounds without truncation re-executes the previous
+      // round's shuffles ~4× per level (measured 15-41 s/query). The lazy
+      // checkpoint truncates the logical plan immediately while deferring
+      // execution to the probe job below.
+      val next = smallStar(largeStar(edges)).localCheckpoint(false)
       // distinct sets: equal iff the full-outer join has no one-sided row.
       // ONE probe job per round (it also materializes the lazy
       // checkpoint) — the two exceptAll probes this replaces cost a
@@ -523,17 +392,16 @@ object Dedup {
       // limit(1) matters: an unchanged round is the RARE case, so the
       // probe short-circuits after the first mismatching row instead of
       // iterating the full join output (replacing it with a counting
-      // aggregate measured 50 s vs 20 s on the 24.75M-edge CcBench set).
+      // aggregate measured 50 s vs 20 s on a 24.75M-edge set).
       val prev = edges.select(col("u").as("pu"), col("v").as("pv"))
       converged = next.join(prev,
           col("u") === col("pu") && col("v") === col("pv"), "full_outer")
         .filter(col("u").isNull || col("pu").isNull)
         .limit(1).count() == 0L
-      intermediates.foreach(unpersistCkpt) // materialized by the probe; dead now
       if (prevCkpt != null) unpersistCkpt(prevCkpt)
       prevCkpt = edges
       edges = next
-      iter += rounds
+      iter += 1
       if (!converged && cutoverEdges > 0 &&
           edges.count() <= cutoverEdges) {
         // endgame: the contracted edge set no longer needs a cluster.
@@ -546,7 +414,7 @@ object Dedup {
         val labels = ccDriverFinishOver(base, edges)
         unpersistCkpt(edges)
         if (prevCkpt != null) unpersistCkpt(prevCkpt)
-        return (labels, iter)
+        return labels
       }
     }
     if (prevCkpt != null) unpersistCkpt(prevCkpt)
@@ -555,9 +423,8 @@ object Dedup {
         s"connectedComponents(star) did not converge in $maxIters rounds")
     val nodes = base.select(explode(array(col("u"), col("v"))).as("id")).distinct()
     val parents = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("__p"))
-    val labels = nodes.join(parents, Seq("id"), "left")
+    nodes.join(parents, Seq("id"), "left")
       .select(col("id"), coalesce(col("__p"), col("id")).as("component"))
-    (labels, iter)
   }
 
   /** Near-dup survivor map: every document → its canonical (kept) doc id.
@@ -567,11 +434,8 @@ object Dedup {
     * [[exactGroups]] — without it, A~B and B~C would dedup B and C against
     * different canonicals. */
   def nearDupGroups(docs: DataFrame, threshold: Double = 0.7,
-                    idCol: String = "doc_id", k: Int = 3,
-                    algo: CcAlgo = CcAlgo.StarContraction,
-                    checkEvery: Int = 3): DataFrame = {
-    val cc = connectedComponents(nearDupPairs(docs, threshold, idCol, k),
-      algo = algo, checkEvery = checkEvery)
+                    idCol: String = "doc_id", k: Int = 3): DataFrame = {
+    val cc = connectedComponents(nearDupPairs(docs, threshold, idCol, k))
     docs.select(col(idCol))
       .join(cc.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .select(col(idCol), coalesce(col("component"), col(idCol)).as("canonical_id"))

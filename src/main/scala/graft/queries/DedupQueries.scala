@@ -122,12 +122,6 @@ object DedupQueries {
     * every decision — shingle hashes, 64 signature mins, 16 band keys, the
     * bucket self-join — is hash-checkable against DuckDB. The production
     * path keeps xxhash64 (faster at scale); this proves the LSH logic. */
-  /** The `dedup_groups` pair pipeline on its fixed sample — exposed for
-    * the isolated CC A/B harness ([[graft.CcBench]]), which pre-materializes
-    * these pairs so algorithm timings exclude the LSH stage entirely. */
-  private[graft] def portablePairsFor(spark: SparkSession, dir: String): DataFrame =
-    portablePairs(Tables.documents(spark, dir).filter(col("doc_id") < PortableCap))
-
   /** Engine-neutral (band, bucket) key rows — the portable-LSH banding
     * stage on its own, shared by the self-join candidate pipeline below
     * and the persisted band tier ([[Dedup.buildNearDupIndex]] et al.),
@@ -340,35 +334,28 @@ object DedupQueries {
     * sampled doc mapped to its canonical (component-min) id. DuckDB
     * recomputes the same components with a recursive CTE, so the
     * transitive closure itself is hash-checked — A~B and B~C must land B
-    * AND C on A's canonical in both engines. The two `_star`/`_minlabel`
-    * twins pin the DISTRIBUTED algorithms against the same oracle. */
+    * AND C on A's canonical in both engines. The `_star` twin pins the
+    * DISTRIBUTED path against the same oracle. */
   def groupsPortable(spark: SparkSession, dir: String): DataFrame =
-    groupsPortableWith(spark, dir, Dedup.CcAlgo.StarContraction,
-      Dedup.DriverFinishEdges)
+    groupsPortableWith(spark, dir, Dedup.DriverFinishEdges)
 
-  /** The registry names of the two deliberately pessimized CC pin twins
-    * below — OWNED HERE, next to their definitions, so a rename cannot
-    * silently desync the bench's evidence split (`graft.Bench` prices
-    * this set outside the headline engine total). */
-  val EvidencePins: Set[String] = Set("dedup_groups_star", "dedup_groups_minlabel")
+  /** The registry name of the deliberately pessimized CC pin twin below —
+    * OWNED HERE, next to its definition, so a rename cannot silently
+    * desync the bench's evidence split (`graft.Bench` prices this set
+    * outside the headline engine total). */
+  val EvidencePins: Set[String] = Set("dedup_groups_star")
 
   /** Same pipeline forced through the distributed large-star/small-star
     * contraction (driver-finish disabled) — the above-bound code path,
-    * hash-proved against the same recursive-CTE oracle. */
+    * hash-proved against the same recursive-CTE oracle: the only oracle
+    * gate on the distributed path over real pairs. */
   def groupsPortableStar(spark: SparkSession, dir: String): DataFrame =
-    groupsPortableWith(spark, dir, Dedup.CcAlgo.StarContraction, 0L)
-
-  /** Same pipeline forced through the distributed batched min-label
-    * propagation — the alternative above-bound algorithm, against the
-    * SAME oracle. */
-  def groupsPortableMinLabel(spark: SparkSession, dir: String): DataFrame =
-    groupsPortableWith(spark, dir, Dedup.CcAlgo.MinLabel, 0L)
+    groupsPortableWith(spark, dir, 0L)
 
   private def groupsPortableWith(spark: SparkSession, dir: String,
-                                 algo: Dedup.CcAlgo,
                                  driverFinishEdges: Long): DataFrame = {
     val docs = Tables.documents(spark, dir).filter(col("doc_id") < PortableCap)
-    val cc = Dedup.connectedComponents(portablePairs(docs), algo = algo,
+    val cc = Dedup.connectedComponents(portablePairs(docs),
       driverFinishEdges = driverFinishEdges)
     docs.select("doc_id")
       .join(cc.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -383,7 +370,8 @@ object DedupQueries {
     * recursive-closure oracle: the canonical map depends only on the
     * verified pair set, and both hash families resolve it identically on
     * the fixture (see the GQuery note); [[nearGroupsPortable]] stays
-    * beside it as the deterministic engine-neutral pin. */
+    * beside it as the deterministic engine-neutral pin, hash-checked
+    * through `corpus_split_leakfree`. */
   def nearGroups(spark: SparkSession, dir: String): DataFrame =
     Dedup.nearDupGroups(Tables.documents(spark, dir), threshold = 0.7)
       .orderBy("doc_id")
@@ -394,7 +382,9 @@ object DedupQueries {
     * Jaccard ≥ 0.7 verification (string shingles, no hashing, so both
     * engines compute identical rationals) → connected components →
     * canonical map. DuckDB recomputes every stage including the
-    * recursive-CTE closure over the VERIFIED edge set. */
+    * recursive-CTE closure over the VERIFIED edge set: the
+    * `corpus_split_leakfree` oracle emits every (doc_id, canonical_id)
+    * row of this map from the `graft_lsh_canon_cap` table. */
   def nearGroupsPortable(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).filter(col("doc_id") < PortableCap)
     val sh = docs.select(col("doc_id"),
@@ -477,18 +467,6 @@ object DedupQueries {
     * recomputes it exactly as `('0x' || substr(md5(t),1,15))::BIGINT`. */
   private def portableTokenHashes(toks: Column): Column =
     transform(toks, t => conv(substring(md5(t), 1, 15), 16, 10).cast("long"))
-
-  /** The capped twin of [[simhashQ]] — same md5-prefix hash, doc_id <
-    * [[PortableCap]]. Retained for registry continuity (it was the
-    * hash-green proof of the bit-vote logic while `dedup_simhash` still
-    * shipped xxhash fingerprints; both are now full hash gates). */
-  def simhashPortableQ(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashTable(
-      Dedup.rebalance(
-        Tables.documents(spark, dir).filter(col("doc_id") < PortableCap)
-          .select(col("doc_id"), col("text")), "doc_id"),
-      hashFn = portableTokenHashes)
-      .orderBy("doc_id")
 
   /** Deterministic stratified sampling: keep a doc iff an engine-neutral
     * hash of its id (md5-prefix mod 100 — the same portable-hash recipe
@@ -966,11 +944,10 @@ object DedupQueries {
       WHERE d.doc_id >= $NdiBase AND d.doc_id < $NdiCap
       ORDER BY d.doc_id""")),
     GQuery("dedup_groups", groupsPortable, Some(groupsOracleSql)),
-    // same oracle on purpose: every CC path — the shipped hybrid
-    // (driver-finish), distributed star, distributed min-label — must
-    // produce the exact same canonical map as DuckDB's closure
+    // same oracle on purpose: both CC paths — the shipped hybrid
+    // (driver-finish) and distributed star — must produce the exact same
+    // canonical map as DuckDB's closure
     GQuery("dedup_groups_star", groupsPortableStar, Some(groupsOracleSql)),
-    GQuery("dedup_groups_minlabel", groupsPortableMinLabel, Some(groupsOracleSql)),
     // FULL hash gate (round-10 verdict #6 — the last structural oracle
     // retired): the shipped fingerprint hash is now the engine-neutral
     // md5 prefix (see simhashQ's scaladoc for why the xxhash form's
@@ -988,21 +965,8 @@ object DedupQueries {
                       x -> CASE WHEN ((x >> i) & 1) = 1 THEN 1 ELSE -1 END)), 0) > 0
                     THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT) AS simhash
       FROM h ORDER BY doc_id""")),
-    // the capped twin of the same fold (registry continuity)
-    GQuery("dedup_simhash_portable", simhashPortableQ, Some(s"""
-      WITH h AS (
-        SELECT doc_id,
-               list_transform($duckToks, t ->
-                 ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hm
-        FROM documents WHERE doc_id < $PortableCap)
-      SELECT doc_id,
-             CAST(list_sum(list_transform(range(0, 64), i ->
-               CASE WHEN coalesce(list_sum(list_transform(hm,
-                      x -> CASE WHEN ((x >> i) & 1) = 1 THEN 1 ELSE -1 END)), 0) > 0
-                    THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT) AS simhash
-      FROM h ORDER BY doc_id""")),
     // FULL-CORPUS oracle: the same md5-LSH → string-shingle-Jaccard →
-    // recursive-closure chain as the portable twin, uncapped — hash-green
+    // recursive-closure chain as nearGroupsPortable, uncapped — hash-green
     // under the same empirically-verified xxhash≡md5 candidate-recall
     // equality as dedup_near_candidates above (the canonical map depends
     // only on the VERIFIED pair set, which both hash families resolve
@@ -1010,11 +974,6 @@ object DedupQueries {
     GQuery("dedup_near_groups", nearGroups, Some(s"""
       ${lshTemps("canon_all")}
       SELECT doc_id, canonical_id FROM graft_lsh_canon_all ORDER BY doc_id""")),
-    // the full near-dup pipeline (candidates → Jaccard verify → CC)
-    // hash-proved with engine-neutral hashing — see nearGroupsPortable
-    GQuery("dedup_near_groups_portable", nearGroupsPortable, Some(s"""
-      ${lshTemps("canon_cap")}
-      SELECT doc_id, canonical_id FROM graft_lsh_canon_cap ORDER BY doc_id""")),
     GQuery("corpus_split_leakfree", splitLeakfreeQ, Some(s"""
       ${lshTemps("canon_cap")}
       SELECT doc_id, canonical_id,
@@ -1028,10 +987,10 @@ object DedupQueries {
       FROM graft_lsh_canon_cap ORDER BY doc_id"""))
   )
 
-  /** The components oracle shared by `dedup_groups`
-    * (large-star/small-star) and `dedup_groups_minlabel` (batched
-    * min-label): both engines must agree on the full transitive
-    * closure (hoisted into the `comp_cap` temp table). */
+  /** The components oracle shared by `dedup_groups` (shipped hybrid)
+    * and `dedup_groups_star` (distributed large-star/small-star): both
+    * engines must agree on the full transitive closure (hoisted into the
+    * `comp_cap` temp table). */
   private lazy val groupsOracleSql: String = s"""
       ${lshTemps("comp_cap")}
       SELECT d.doc_id, CAST(coalesce(comp.c, d.doc_id) AS BIGINT) AS canonical_id
@@ -1044,7 +1003,7 @@ object DedupQueries {
     * pairs, Jaccard-verified pairs, and the recursive closures — is
     * hoisted into session-scoped DuckDB temp tables created once
     * (`IF NOT EXISTS`) by whichever LSH-family oracle the compare runs
-    * first and reused by the remaining seven on the same connection;
+    * first and reused by the rest on the same connection;
     * the pure-CTE form re-ran the full chain per oracle (8 × ~48 s at
     * sf0.01). Falls back to build-per-oracle on fresh connections.
     * Statement text per table name comes from this ONE emitter so the

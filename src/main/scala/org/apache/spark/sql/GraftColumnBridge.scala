@@ -41,16 +41,4 @@ object GraftColumnBridge {
       case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false)
       case _                       => ()
     }
-
-  /** Free EVERY localCheckpoint cache reachable from a Dataset's plan —
-    * for results whose root is not itself the checkpoint (e.g. the label
-    * frame `connectedComponents` returns is a join OVER its final
-    * checkpoint, so [[unpersistLocalCheckpoint]] can't reach it). Call
-    * only when the frame (and anything derived from it) is dead: the
-    * truncated lineage cannot recompute dropped blocks. */
-  def unpersistReachableLocalCheckpoints(ds: Dataset[_]): Unit =
-    ds.queryExecution.analyzed.foreach {
-      case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _                       => ()
-    }
 }
